@@ -57,11 +57,10 @@ _STALEST_FIRST = [
     "dsir_select_docs", "keep_best_docs", "novelty_docs",
     "repetition_score", "minhash_lsh", "ngram_jaccard",
 ]
-_NEVER_DRIVER_CHECKED = _STALEST_FIRST  # name kept for test/tooling compat
 
 
 def _rotated(mapping: dict) -> dict:
-    head = {k: mapping[k] for k in _NEVER_DRIVER_CHECKED if k in mapping}
+    head = {k: mapping[k] for k in _STALEST_FIRST if k in mapping}
     head.update({k: v for k, v in mapping.items() if k not in head})
     return head
 

@@ -5,7 +5,7 @@ engine with the operator semantics of mggg/maup (reference at
 Public API mirrors /root/reference/maup/__init__.py:28-45, re-expressed
 over Spark DataFrames with WKB geometry columns:
 
-- assign / assign_points / assign_by_area / assign_to_max
+- assign / assign_points / assign_to_max
 - intersections / prorate / normalize
 - adjacencies, doctor, close_gaps, resolve_overlaps, quick_repair,
   snap_to_grid, crop_to, expand_to  (operators.repair / adjacency)
@@ -23,8 +23,6 @@ from .operators.adjacencies import (
 from .operators.components import connected_components
 from .operators.assign import (
     assign,
-    assign_by_area,
-    assign_by_covering,
     assign_points,
     assign_to_max,
 )
@@ -96,9 +94,7 @@ __all__ = [
     "overlay_areas_tiled",
     "union_area_tiled",
     "assign",
-    "assign_by_area",
     "autorepair",
-    "assign_by_covering",
     "assign_points",
     "assign_to_max",
     "close_gaps",

@@ -17,12 +17,6 @@ from pyspark.sql import functions as F
 _STOPWORDS = ("the", "and", "data", "table", "query")
 
 
-def token_count(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    return docs.withColumn(
-        "n_tokens", F.size(F.split(F.col(text_col), " "))
-    )
-
-
 def text_stats(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """Quality scoring: lengths, token stats, stopword ratio."""
     t = F.col(text_col)

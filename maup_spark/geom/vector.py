@@ -29,39 +29,9 @@ def _parse_cache(wkbs: pd.Series) -> dict:
 _RECT_WKB_LEN = 1 + 4 + 4 + 4 + 5 * 16  # LE polygon, 1 ring, 5 points
 
 
-def fast_rect_bounds(b) -> tuple | None:
-    """(x0, y0, x1, y1) if ``b`` is a single-ring 5-point axis-aligned
-    little-endian WKB polygon, else None.  ~10× cheaper than a full
-    parse; lets rect-tiled layers (grid districts, bbox pieces) skip
-    Geometry object construction entirely."""
-    if (
-        b is None
-        or len(b) != _RECT_WKB_LEN
-        or b[:13] != b"\x01\x03\x00\x00\x00\x01\x00\x00\x00\x05\x00\x00\x00"
-    ):
-        return None
-    c = np.frombuffer(b, "<f8", 10, offset=13)
-    xs, ys = c[0::2], c[1::2]
-    if xs[0] != xs[4] or ys[0] != ys[4]:
-        return None
-    for i in range(4):
-        if xs[i + 1] != xs[i] and ys[i + 1] != ys[i]:
-            return None
-    x0, x1 = xs.min(), xs.max()
-    y0, y1 = ys.min(), ys.max()
-    if np.unique(xs).size != 2 or np.unique(ys).size != 2:
-        return None
-    return (x0, y0, x1, y1)
-
-
 def batch_area(wkbs: pd.Series) -> pd.Series:
     cache = _parse_cache(wkbs)
     return pd.Series([cache[b].area if b is not None else np.nan for b in wkbs])
-
-
-def batch_length(wkbs: pd.Series) -> pd.Series:
-    cache = _parse_cache(wkbs)
-    return pd.Series([cache[b].length if b is not None else np.nan for b in wkbs])
 
 
 def batch_bounds(wkbs: pd.Series) -> pd.DataFrame:
@@ -81,17 +51,12 @@ def batch_bounds(wkbs: pd.Series) -> pd.DataFrame:
     return pd.DataFrame(arr, columns=["xmin", "ymin", "xmax", "ymax"])
 
 
-def batch_cover_cells(wkbs: pd.Series, grid) -> pd.Series:
-    """bbox cell cover per geometry -> list[int] column (pre-explode)."""
-    cache = _parse_cache(wkbs)
-    out = []
-    for b in wkbs:
-        if b is None:
-            out.append([])
-        else:
-            xmin, ymin, xmax, ymax = cache[b].bounds
-            out.append(grid.cover_bbox(xmin, ymin, xmax, ymax).tolist())
-    return pd.Series(out)
+def _rows_by_polygon(wkbs: pd.Series):
+    """(parsed polygon, row indices) per distinct non-null WKB in the
+    batch — each geometry is parsed once, however many rows repeat it."""
+    df = pd.DataFrame({"i": np.arange(len(wkbs))})
+    for b, grp in df.groupby(wkbs.to_numpy(), sort=False):
+        yield Geometry.from_wkb(b), grp["i"].to_numpy()
 
 
 def batch_points_in_polygon(
@@ -100,14 +65,12 @@ def batch_points_in_polygon(
     """Vectorized PIP: groups rows by identical polygon WKB and runs one
     numpy even-odd test per distinct polygon (the distributed analog of
     the reference's prepared-geometry reuse,
-    /root/reference/maup/indexed_geometries.py:38-43)."""
+    /root/reference/maup/indexed_geometries.py:38-43).  NULL polygon ->
+    False."""
     x = xs.to_numpy(dtype=np.float64)
     y = ys.to_numpy(dtype=np.float64)
     result = np.zeros(len(x), dtype=bool)
-    df = pd.DataFrame({"i": np.arange(len(x))})
-    for b, grp in df.groupby(wkbs.to_numpy(), sort=False):
-        geom = Geometry.from_wkb(b)
-        idx = grp["i"].to_numpy()
+    for geom, idx in _rows_by_polygon(wkbs):
         inside = np.zeros(len(idx), dtype=bool)
         for rings in geom.polygons():
             inside ^= points_in_rings(x[idx], y[idx], rings)
@@ -115,12 +78,33 @@ def batch_points_in_polygon(
     return pd.Series(result)
 
 
-def _rect_memo(wkbs: pd.Series) -> dict:
-    memo: dict[bytes, tuple | None] = {}
-    for b in wkbs:
-        if b is not None and b not in memo:
-            memo[b] = fast_rect_bounds(b)
-    return memo
+def batch_point_boundary_distance(
+    xs: pd.Series, ys: pd.Series, wkbs: pd.Series
+) -> pd.Series:
+    """Exact point -> polygon-boundary distance (every ring of every
+    part, holes included): one (points × segments) numpy sweep per
+    distinct polygon.  A point on the boundary gets exactly 0.0; a NULL
+    or ring-less polygon gets +inf."""
+    px = xs.to_numpy(dtype=np.float64)
+    py = ys.to_numpy(dtype=np.float64)
+    out = np.full(len(px), np.inf)
+    for geom, idx in _rows_by_polygon(wkbs):
+        segs = [
+            np.column_stack([r[:-1], r[1:]])
+            for rings in geom.polygons()
+            for r in rings
+        ]
+        if not segs:
+            continue
+        sg = np.vstack(segs)
+        x1, y1, x2, y2 = sg[:, 0], sg[:, 1], sg[:, 2], sg[:, 3]
+        dx, dy = x2 - x1, y2 - y1
+        ll = np.where(dx * dx + dy * dy == 0, 1.0, dx * dx + dy * dy)
+        t = ((px[idx, None] - x1) * dx + (py[idx, None] - y1) * dy) / ll
+        t = np.clip(t, 0.0, 1.0)
+        d = np.hypot(x1 + t * dx - px[idx, None], y1 + t * dy - py[idx, None])
+        out[idx] = d.min(axis=1)
+    return pd.Series(out)
 
 
 _RECT_HDR = b"\x01\x03\x00\x00\x00\x01\x00\x00\x00\x05\x00\x00\x00"
@@ -131,8 +115,9 @@ def batch_rect_bounds_arr(wkbs) -> np.ndarray:
     """(N, 4) [x0 y0 x1 y1] with NaN rows for non-rect geometries.
 
     All candidate rows are parsed in ONE numpy view over the
-    concatenated 93-byte buffers — no per-row object churn.  This is the
-    whole-batch analog of ``fast_rect_bounds``.
+    concatenated 93-byte buffers — no per-row object churn.  A rect is a
+    single-ring 5-point axis-aligned little-endian polygon with positive
+    width and height.
     """
     n = len(wkbs)
     out = np.full((n, 4), np.nan)
@@ -234,6 +219,17 @@ def batch_covers(a_wkbs: pd.Series, b_wkbs: pd.Series) -> pd.Series:
             gb = cb[b] = Geometry.from_wkb(b)
         out[i] = ga.covers(gb)
     return pd.Series(out)
+
+
+def batch_covers_area(t_wkbs: pd.Series, s_wkbs: pd.Series) -> pd.DataFrame:
+    """(t covers s, area of s ∩ t) per row in one pass — ``assign``'s
+    fused covering + area refine."""
+    return pd.DataFrame(
+        {
+            "covers": batch_covers(t_wkbs, s_wkbs),
+            "area": batch_intersection_area(s_wkbs, t_wkbs),
+        }
+    )
 
 
 def batch_intersection_area(a_wkbs: pd.Series, b_wkbs: pd.Series) -> pd.Series:

@@ -1,10 +1,9 @@
-from .assign import assign, assign_by_area, assign_points, assign_to_max
+from .assign import assign, assign_points, assign_to_max
 from .intersections import intersections, prorate
 from .normalize import normalize
 
 __all__ = [
     "assign",
-    "assign_by_area",
     "assign_points",
     "assign_to_max",
     "intersections",

@@ -22,12 +22,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..index.cells import CellGrid
-from .intersections import _IX_SCHEMA, _intersection_udf
 from .spatial import (
     DEFAULT_GRID,
+    ById,
     _cell_of,
     geom_broadcast,
-    make_pair_intersection_udf,
+    refine,
     with_cell_cover,
 )
 
@@ -104,12 +104,10 @@ def adjacencies(
     joined = joined.filter(ref_cell == F.col("cell_id"))
 
     if broadcast_geoms:
-        pair_udf = make_pair_intersection_udf(bc, _IX_SCHEMA)
-        joined = joined.withColumn("__ix", pair_udf(F.col("id_i"), F.col("id_j")))
+        gi, gj = ById(F.col("id_i"), bc), ById(F.col("id_j"), bc)
     else:
-        joined = joined.withColumn(
-            "__ix", _intersection_udf(F.col("__gi"), F.col("__gj"))
-        )
+        gi, gj = F.col("__gi"), F.col("__gj")
+    joined = joined.withColumn("__ix", refine("intersection", gi, gj))
     out = joined.filter(~F.col("__ix.is_empty")).select(
         "id_i",
         "id_j",

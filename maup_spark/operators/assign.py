@@ -14,11 +14,14 @@ Semantics mirror /root/reference/maup/assign.py:13-54 exactly:
    ``AssigmentWarning``).
 
 Physical plan: exploded-cell broadcast hash join → vectorized exact
-refine (PIP / covers / intersection area) → window ``row_number`` top-1.
-The only shuffles are the unmatched anti-join and the top-1 window; the
-candidate join is broadcast (polygon layers are the small side).  A kNN
-fallback for points outside every target joins the unmatched minority
-against targets on a *coarsened* cell grid (one ring at 2^coarsen cell
+refine (``spatial.refine``: PIP for points, fused covers + area for
+polygons) → ONE map-side-combinable ``min(struct)`` hash aggregation
+per source that picks the covering target or the top-1 by area.  The
+shuffles are that aggregation and the left re-join that keeps
+candidate-less sources (skipped by ``only_assigned``); the candidate
+join is broadcast (polygon layers are the small side).  A kNN fallback
+for points outside every target joins the unmatched minority against
+targets on a *coarsened* cell grid (one ring at 2^coarsen cell
 granularity) and picks the winner by exact vectorized point→boundary
 distance.
 """
@@ -32,16 +35,11 @@ from pyspark.sql import functions as F
 from ..index.cells import CellGrid
 from .spatial import (
     DEFAULT_GRID,
+    ById,
     candidate_pairs,
-    covers_area_udf,
-    covers_udf,
     geom_broadcast,
-    make_covers_area_by_id_udf,
-    make_covers_by_id_udf,
-    make_dist_by_id_udf,
-    make_intersection_area_by_id_udf,
-    make_pip_by_id_udf,
     point_cell_col,
+    refine,
     with_cell_cover,
 )
 
@@ -153,13 +151,9 @@ def assign_points(
             & (F.col(y) >= by0)
             & (F.col(y) <= by1)
         )
-    elif broadcast_targets:
-        pip_by_id = make_pip_by_id_udf(bc)
-        inside = pip_by_id(F.col(x), F.col(y), F.col("__tid"))
     else:
-        from .spatial import pip_udf
-
-        inside = pip_udf(F.col(x), F.col(y), F.col("__tgeom"))
+        tgeom = ById(F.col("__tid"), bc) if broadcast_targets else F.col("__tgeom")
+        inside = refine("pip", F.col(x), F.col(y), tgeom)
     hit_tid = F.when(F.col("__tid").isNotNull() & inside, F.col("__tid"))
     # NOTE (round 6, measured): a fully FUSED layout — union the
     # coarse-ring kNN candidates of EVERY point with the PIP candidates
@@ -328,7 +322,6 @@ def _knn_points(
             "__tid",
             "__tgeom",
         )
-    dist_udf = make_dist_by_id_udf(bc)
 
     n = F.lit(coarse.n)
     ix = F.floor((F.col(x) - F.lit(coarse.x0)) / F.lit(coarse.wx)).cast("long")
@@ -358,7 +351,7 @@ def _knn_points(
         bounds_cols=target_bounds,
     ).drop("__tgeom")
     cand = pts.join(F.broadcast(tgt), "cell_id")
-    dist = dist_udf(F.col(x), F.col(y), F.col("__tid"))
+    dist = refine("distance", F.col(x), F.col(y), ById(F.col("__tid"), bc))
     # one partial-aggregating shuffle: min over (dist, tid) pairs is the
     # argmin with the deterministic smallest-id tie-break; duplicated
     # candidate rows (pair seen in several cells) are harmless under min
@@ -451,18 +444,13 @@ def assign(
             .alias("__area"),
             *carry_source_cols,
         )
-    elif broadcast_targets:
-        bc = geom_broadcast(tgt, "__tid", "__tgeom")
-        ca = make_covers_area_by_id_udf(bc)(F.col("__tid"), F.col("__sgeom"))
-        pairs = cand.withColumn("__ca", ca).select(
-            "__sid",
-            "__tid",
-            F.col("__ca.covers").alias("__cov"),
-            F.col("__ca.area").alias("__area"),
-            *carry_source_cols,
-        )
     else:
-        ca = covers_area_udf(F.col("__tgeom"), F.col("__sgeom"))
+        tgeom = (
+            ById(F.col("__tid"), geom_broadcast(tgt, "__tid", "__tgeom"))
+            if broadcast_targets
+            else F.col("__tgeom")
+        )
+        ca = refine("covers_area", tgeom, F.col("__sgeom"))
         pairs = cand.withColumn("__ca", ca).select(
             "__sid",
             "__tid",
@@ -529,96 +517,6 @@ def assign(
     return out
 
 
-def assign_by_covering(
-    sources: DataFrame,
-    targets: DataFrame,
-    source_id: str = "source_id",
-    target_id: str = "target_id",
-    grid: CellGrid = DEFAULT_GRID,
-    source_bounds: tuple | None = None,
-    target_bounds: tuple | None = None,
-) -> DataFrame:
-    """Phase 1 alone: covered-by semi-join with the multi-cover drop
-    (/root/reference/maup/assign.py:40-42).  NULL target = not covered."""
-    src = sources.select(
-        F.col(source_id).alias("__sid"),
-        F.col("geometry").alias("__sgeom"),
-        *(source_bounds or ()),
-    )
-    tgt = targets.select(
-        F.col(target_id).alias("__tid"),
-        F.col("geometry").alias("__tgeom"),
-        *(target_bounds or ()),
-    )
-    bc = geom_broadcast(tgt, "__tid", "__tgeom")
-    cand = candidate_pairs(
-        src, tgt, grid, "__sgeom", "__tgeom",
-        source_bounds=source_bounds, target_bounds=target_bounds,
-        drop_target_geom=True,
-    )
-    covers_by_id = make_covers_by_id_udf(bc)
-    covered = (
-        cand.filter(covers_by_id(F.col("__tid"), F.col("__sgeom")))
-        .groupBy("__sid")
-        .agg(F.min("__tid").alias("__tid"), F.count("*").alias("__n"))
-        .filter(F.col("__n") == 1)
-        .select(
-            F.col("__sid").alias(source_id), F.col("__tid").alias(target_id)
-        )
-    )
-    return sources.select(source_id).join(covered, source_id, "left")
-
-
-def assign_by_area(
-    sources: DataFrame,
-    targets: DataFrame,
-    source_id: str = "source_id",
-    target_id: str = "target_id",
-    grid: CellGrid = DEFAULT_GRID,
-    source_bounds: tuple | None = None,
-    target_bounds: tuple | None = None,
-    broadcast_targets: bool = True,
-) -> DataFrame:
-    """argmax_t area(source ∩ target) over strictly-positive-area pairs
-    (/root/reference/maup/assign.py:45-46)."""
-    src = sources.select(
-        F.col(source_id).alias("__sid"),
-        F.col("geometry").alias("__sgeom"),
-        *(source_bounds or ()),
-    )
-    tgt = targets.select(
-        F.col(target_id).alias("__tid"),
-        F.col("geometry").alias("__tgeom"),
-        *(target_bounds or ()),
-    )
-    cand = candidate_pairs(
-        src, tgt, grid, "__sgeom", "__tgeom",
-        source_bounds=source_bounds, target_bounds=target_bounds,
-        broadcast_targets=broadcast_targets,
-        drop_target_geom=broadcast_targets,
-    )
-    if broadcast_targets:
-        bc = geom_broadcast(tgt, "__tid", "__tgeom")
-        ia_by_id = make_intersection_area_by_id_udf(bc)
-        area_col = ia_by_id(F.col("__tid"), F.col("__sgeom"))
-    else:
-        from ..geom import vector as V
-
-        pair_area = F.pandas_udf(V.batch_intersection_area, "double")
-        area_col = pair_area(F.col("__tgeom"), F.col("__sgeom"))
-    pairs = cand.withColumn("__area", area_col)
-    pairs = pairs.filter(F.col("__area") > 0)
-    return assign_to_max(
-        pairs.select(
-            F.col("__sid").alias(source_id),
-            F.col("__tid").alias(target_id),
-            F.col("__area").alias("weight"),
-        ),
-        source_id,
-        target_id,
-    )
-
-
 def assign_to_max(
     weights: DataFrame,
     source_id: str = "source_id",
@@ -631,14 +529,17 @@ def assign_to_max(
     (source,target)-sorted input).
 
     ONE hash aggregation: ``min(struct(-weight, target))`` is the
-    (weight DESC, target ASC) top-1 — identical to the former
-    row_number window on non-null weights (the operator's contract),
-    but map-side-combinable, so a hot source reduces per partition
-    instead of serializing into one window-sort task."""
+    (weight DESC, target ASC) top-1, map-side-combinable, so a hot
+    source reduces per partition instead of serializing into one
+    window-sort task.  NULL weights never win (``min`` would sort a NULL
+    struct field first, so those rows are masked out); a source whose
+    weights are all NULL keeps its row with a NULL target."""
+    w = F.col(weight)
     best = weights.groupBy(source_id).agg(
         F.min(
-            F.struct(
-                (-F.col(weight)).alias("nw"), F.col(target_id).alias("t")
+            F.when(
+                w.isNotNull(),
+                F.struct((-w).alias("nw"), F.col(target_id).alias("t")),
             )
         ).alias("__b")
     )

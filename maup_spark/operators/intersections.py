@@ -15,13 +15,13 @@ Physical plans (geometry bytes never ride the candidate join):
   zero Python, zero geometry transfer.
 - **general polygons, small target layer** (``broadcast_targets=True``):
   targets are collected into a SparkContext broadcast {id: wkb};
-  candidates carry only ids + source WKB; the exact overlay runs in one
-  Arrow-batched struct UDF that resolves targets from the broadcast
-  (parsed once per worker).
+  candidates carry only ids + source WKB; the exact overlay
+  (``spatial.refine("intersection", ...)``) resolves targets from the
+  broadcast.
 - **general polygons, BIG target layer** (``broadcast_targets=False``):
   no collect anywhere — target WKB shards across the cluster inside the
   salted cell shuffle join (hot cells get two-level salting, AQE skew
-  join is the backstop) and the refine UDF reads both WKB columns.
+  join is the backstop) and the same refine reads both WKB columns.
 
 ``prorate`` is two equi-joins plus a hash aggregation — fully
 codegen'd.
@@ -31,71 +31,10 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    BinaryType,
-    BooleanType,
-    DoubleType,
-    StructField,
-    StructType,
-)
 
 from ..geom import vector as V
 from ..index.cells import CellGrid
-from .spatial import (
-    DEFAULT_GRID,
-    candidate_pairs,
-    geom_broadcast,
-    make_intersection_by_id_udf,
-)
-
-_IX_SCHEMA = StructType(
-    [
-        StructField("wkb", BinaryType()),
-        StructField("area", DoubleType()),
-        StructField("length", DoubleType()),
-        StructField("is_empty", BooleanType()),
-    ]
-)
-
-# keep_geometry=False twin: the kernel skips per-pair Geometry
-# construction + WKB encode and no geometry bytes cross Arrow
-_IX_SCHEMA_NOWKB = StructType(
-    [
-        StructField("area", DoubleType()),
-        StructField("length", DoubleType()),
-        StructField("is_empty", BooleanType()),
-    ]
-)
-
-
-def _intersection_batch(a, b):
-    return V.batch_intersection(a, b)
-
-
-def _intersection_batch_arrangement(a, b):
-    return V.batch_intersection_arrangement(a, b)
-
-
-def _intersection_batch_nowkb(a, b):
-    return V.batch_intersection(a, b, with_wkb=False)
-
-
-def _intersection_batch_arrangement_nowkb(a, b):
-    return V.batch_intersection_arrangement(a, b, with_wkb=False)
-
-
-# asNondeterministic stops CollapseProject from cloning the Python call
-# once per struct-field reference (verified via .explain)
-_intersection_udf = F.pandas_udf(_intersection_batch, _IX_SCHEMA).asNondeterministic()
-_intersection_udf_arrangement = F.pandas_udf(
-    _intersection_batch_arrangement, _IX_SCHEMA
-).asNondeterministic()
-_intersection_udf_nowkb = F.pandas_udf(
-    _intersection_batch_nowkb, _IX_SCHEMA_NOWKB
-).asNondeterministic()
-_intersection_udf_arrangement_nowkb = F.pandas_udf(
-    _intersection_batch_arrangement_nowkb, _IX_SCHEMA_NOWKB
-).asNondeterministic()
+from .spatial import DEFAULT_GRID, ById, candidate_pairs, geom_broadcast, refine
 
 
 def intersections(
@@ -164,54 +103,36 @@ def intersections(
         F.col("geometry").alias("__tgeom"),
         *(target_bounds or ()),
     )
-    ix_schema = _IX_SCHEMA if keep_geometry else _IX_SCHEMA_NOWKB
-    if broadcast_targets:
-        # small target layer: geometry rides a SparkContext broadcast
-        # {id: wkb}; the candidate join carries ids only
-        bc = geom_broadcast(tgt_small, "__tid", "__tgeom")
-        cand = candidate_pairs(
-            src,
-            tgt_small,
-            grid,
-            "__sgeom",
-            "__tgeom",
-            broadcast_targets=True,
-            source_bounds=source_bounds,
-            target_bounds=target_bounds,
-            drop_target_geom=True,
-            max_cells=max_cells,
-        )
-        ix_udf = make_intersection_by_id_udf(
-            bc, ix_schema, exact_kernel, with_wkb=keep_geometry
-        )
-        ix_col = ix_udf(F.col("__tid"), F.col("__sgeom"))
-    else:
-        # target layer too big for one driver dict: NO collect anywhere —
-        # target WKB shards across the cluster by cell region inside the
-        # salted shuffle join (candidate_pairs salts hot cells, AQE skew
-        # join is the backstop) and the refine reads both WKB columns
-        cand = candidate_pairs(
-            src,
-            tgt_small,
-            grid,
-            "__sgeom",
-            "__tgeom",
-            broadcast_targets=False,
-            source_bounds=source_bounds,
-            target_bounds=target_bounds,
-            max_cells=max_cells,
-        )
-        if exact_kernel == "arrangement":
-            shuffle_udf = (
-                _intersection_udf_arrangement
-                if keep_geometry
-                else _intersection_udf_arrangement_nowkb
-            )
-        else:
-            shuffle_udf = (
-                _intersection_udf if keep_geometry else _intersection_udf_nowkb
-            )
-        ix_col = shuffle_udf(F.col("__sgeom"), F.col("__tgeom"))
+    # small target layer: geometry rides a SparkContext broadcast
+    # {id: wkb} and the candidate join carries ids only.  Target layer
+    # too big for one driver dict: NO collect anywhere — target WKB
+    # shards across the cluster by cell region inside the salted shuffle
+    # join (candidate_pairs salts hot cells, AQE skew join is the
+    # backstop) and the refine reads both WKB columns
+    cand = candidate_pairs(
+        src,
+        tgt_small,
+        grid,
+        "__sgeom",
+        "__tgeom",
+        broadcast_targets=broadcast_targets,
+        source_bounds=source_bounds,
+        target_bounds=target_bounds,
+        drop_target_geom=broadcast_targets,
+        max_cells=max_cells,
+    )
+    tgeom = (
+        ById(F.col("__tid"), geom_broadcast(tgt_small, "__tid", "__tgeom"))
+        if broadcast_targets
+        else F.col("__tgeom")
+    )
+    ix_col = refine(
+        "intersection",
+        F.col("__sgeom"),
+        tgeom,
+        convex_fast=exact_kernel != "arrangement",
+        with_wkb=keep_geometry,
+    )
     geom_col = (
         F.col("__ix.wkb")
         if keep_geometry

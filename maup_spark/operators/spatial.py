@@ -25,17 +25,18 @@ Physical notes (these made a 3-5× difference, verified by
 
 from __future__ import annotations
 
+from typing import NamedTuple
+
+import pandas as pd
+from pyspark import Broadcast
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
+    BinaryType,
     BooleanType,
     DoubleType,
     StructField,
     StructType,
-)
-
-_COVERS_AREA_TYPE = StructType(
-    [StructField("covers", BooleanType()), StructField("area", DoubleType())]
 )
 
 from ..geom import vector as V
@@ -198,26 +199,23 @@ def with_cell_cover(
     )
 
 
-@F.pandas_udf(BooleanType())
-def pip_udf(xs, ys, wkbs):
-    return V.batch_points_in_polygon(xs, ys, wkbs)
-
-
-@F.pandas_udf(BooleanType())
-def covers_udf(a_wkbs, b_wkbs):
-    return V.batch_covers(a_wkbs, b_wkbs)
-
-
 # ---------------------------------------------------------------------------
-# broadcast-geometry refinement
+# exact refine: the one place this engine runs per-pair Python
 #
+# Every candidate-pair refine (PIP, covers + area, intersection,
+# point->boundary distance) is one ``refine(op, ...)`` call: the op
+# table names the ``geom.vector`` batch kernel and its Spark output type,
+# and the driver builds the Arrow-batched pandas UDF around it.
+#
+# A geometry argument is either a WKB column or ``ById(id_col, bc)``.
 # Shipping polygon WKB through a multi-million-row candidate join repeats
 # the same few thousand geometries millions of times over Arrow — measured
 # as THE scaling bottleneck (Python workers starved at ~50% while the JVM
-# serialized binaries).  Instead the small layer is collected once into a
-# SparkContext broadcast {id: wkb}; refine UDFs receive only the id column
-# and parse each geometry once per worker (cached on the function object,
-# surviving across batches in reused workers).
+# serialized binaries).  So a small layer is collected once into a
+# SparkContext broadcast {id: wkb} (``geom_broadcast``); the candidate
+# join carries only its id column, and the driver resolves ids to WKB
+# per batch before the kernel runs.  The kernels parse each distinct
+# geometry once per batch.
 # ---------------------------------------------------------------------------
 
 
@@ -228,196 +226,71 @@ def geom_broadcast(df: DataFrame, id_col: str, geom_col: str = "geometry"):
     return sc.broadcast({r[0]: bytes(r[1]) for r in rows})
 
 
-def make_pip_by_id_udf(bc):
-    """(x, y, target_id) -> point-in-polygon, polygons from broadcast."""
+class ById(NamedTuple):
+    """A ``refine`` geometry argument given as an id column whose WKB is
+    looked up in a ``geom_broadcast`` dict."""
 
-    def batch(xs, ys, tids):
-        import numpy as np
-        import pandas as pd
-
-        from ..geom.base import Geometry, points_in_rings
-
-        cache = batch.__dict__.setdefault("_geoms", {})
-        x = xs.to_numpy(dtype=np.float64)
-        y = ys.to_numpy(dtype=np.float64)
-        res = np.zeros(len(x), dtype=bool)
-        df = pd.DataFrame({"i": np.arange(len(x))})
-        for tid, grp in df.groupby(tids.to_numpy(), sort=False):
-            g = cache.get(tid)
-            if g is None:
-                g = cache[tid] = Geometry.from_wkb(bc.value[tid])
-            idx = grp["i"].to_numpy()
-            inside = np.zeros(len(idx), dtype=bool)
-            for rings in g.polygons():
-                inside ^= points_in_rings(x[idx], y[idx], rings)
-            res[idx] = inside
-        return pd.Series(res)
-
-    return F.pandas_udf(batch, "boolean")
+    col: Column
+    bc: Broadcast
 
 
-def _covers_values(bc, tids, swkbs, caches):
-    """Shared covers kernel: rect fast path via cached target bounds,
-    exact Geometry.covers otherwise.  ``caches`` is the host function's
-    __dict__ (per-worker persistent)."""
-    from ..geom.base import Geometry
-    from ..geom.vector import batch_rect_bounds_arr, fast_rect_bounds
-
-    cache = caches.setdefault("_geoms", {})
-    rcache = caches.setdefault("_rects", {})
-    sb = batch_rect_bounds_arr(swkbs)
-    out = []
-    for i, (tid, sw) in enumerate(zip(tids, swkbs)):
-        if tid not in rcache:
-            rcache[tid] = fast_rect_bounds(bc.value[tid])
-        tr = rcache[tid]
-        srow = sb[i]
-        if tr is not None and srow[0] == srow[0]:
-            out.append(
-                tr[0] <= srow[0]
-                and tr[1] <= srow[1]
-                and tr[2] >= srow[2]
-                and tr[3] >= srow[3]
-            )
-            continue
-        g = cache.get(tid)
-        if g is None:
-            g = cache[tid] = Geometry.from_wkb(bc.value[tid])
-        out.append(g.covers(Geometry.from_wkb(sw)))
-    return out
+def _intersection_type(convex_fast: bool = True, with_wkb: bool = True) -> StructType:
+    # convex_fast picks a kernel tier; only with_wkb changes the output
+    fields = [
+        StructField("area", DoubleType()),
+        StructField("length", DoubleType()),
+        StructField("is_empty", BooleanType()),
+    ]
+    if with_wkb:
+        fields.insert(0, StructField("wkb", BinaryType()))
+    return StructType(fields)
 
 
-def make_covers_by_id_udf(bc):
-    """(target_id, source_wkb) -> target covers source."""
-
-    def batch(tids, swkbs):
-        import pandas as pd
-
-        return pd.Series(_covers_values(bc, tids, swkbs, batch.__dict__))
-
-    return F.pandas_udf(batch, "boolean")
-
-
-def make_covers_area_by_id_udf(bc):
-    """(target_id, source_wkb) -> struct(covers, area) in ONE Arrow
-    pass — the fused refine behind ``assign``: the two-phase
-    covering-then-area formulation shipped every candidate batch to
-    Python twice (and ran two candidate joins); computing both
-    predicates per pair halves the Arrow traffic and drops a join."""
-
-    def batch(tids, swkbs):
-        import pandas as pd
-
-        covers = _covers_values(bc, tids, swkbs, batch.__dict__)
-        twkbs = pd.Series([bc.value[t] for t in tids])
-        area = V.batch_intersection_area(swkbs, twkbs)
-        return pd.DataFrame({"covers": covers, "area": area})
-
-    return F.pandas_udf(batch, _COVERS_AREA_TYPE)
+# op -> (batch kernel, Spark output type given the kernel's keyword args)
+_REFINE_OPS = {
+    # (x, y, polygon) -> point in polygon
+    "pip": (V.batch_points_in_polygon, lambda: BooleanType()),
+    # (target, source) -> struct(target covers source, overlap area)
+    "covers_area": (
+        V.batch_covers_area,
+        lambda: StructType(
+            [StructField("covers", BooleanType()), StructField("area", DoubleType())]
+        ),
+    ),
+    # (a, b; convex_fast, with_wkb) -> struct([wkb,] area, length, is_empty)
+    "intersection": (V.batch_intersection, _intersection_type),
+    # (x, y, polygon) -> exact point -> boundary distance
+    "distance": (V.batch_point_boundary_distance, lambda: DoubleType()),
+}
 
 
-@F.pandas_udf(_COVERS_AREA_TYPE)
-def covers_area_udf(t_wkbs, s_wkbs):
-    """Pair-WKB twin of ``make_covers_area_by_id_udf`` for the
-    non-broadcast (shuffle) path."""
-    import pandas as pd
-
-    return pd.DataFrame(
-        {
-            "covers": V.batch_covers(t_wkbs, s_wkbs),
-            "area": V.batch_intersection_area(s_wkbs, t_wkbs),
-        }
+def _wkbs_of(ids: pd.Series, geoms: dict) -> pd.Series:
+    # a NULL id (an unmatched left-join row) is a NULL geometry
+    return pd.Series(
+        [None if n else geoms[i] for i, n in zip(ids, ids.isna())], dtype=object
     )
 
 
-def make_intersection_by_id_udf(
-    bc, schema, exact_kernel: str = "auto", with_wkb: bool = True
-):
-    """(target_id, source_wkb) -> intersection struct, target geometry
-    from broadcast (source WKB still ships once per pair).
-    ``exact_kernel="arrangement"`` disables the convex-pair fast clip;
-    ``with_wkb=False`` (with a wkb-less schema) skips building and
-    serializing the intersection geometry (see
-    geom.vector.batch_intersection)."""
-    convex_fast = exact_kernel != "arrangement"
+def refine(op: str, *args, **kernel_kw) -> Column:
+    """Exact refine ``op`` over candidate-pair columns ``args`` (plain
+    columns, WKB columns or ``ById`` geometries), as ONE Arrow-batched
+    pandas UDF.  ``kernel_kw`` passes through to the kernel.
 
-    def batch(tids, swkbs):
-        import pandas as pd
+    Struct outputs are ``asNondeterministic`` so CollapseProject cannot
+    clone the Python call once per struct-field reference (verified via
+    ``.explain``)."""
+    kernel, out_type = _REFINE_OPS[op]
+    rtype = out_type(**kernel_kw)
+    bcs = [a.bc if isinstance(a, ById) else None for a in args]
 
-        twkbs = pd.Series([bc.value[t] for t in tids])
-        return V.batch_intersection(
-            swkbs, twkbs, convex_fast=convex_fast, with_wkb=with_wkb
-        )
+    def batch(*cols):
+        cols = [c if bc is None else _wkbs_of(c, bc.value) for c, bc in zip(cols, bcs)]
+        return kernel(*cols, **kernel_kw)
 
-    return F.pandas_udf(batch, schema).asNondeterministic()
-
-
-def make_intersection_area_by_id_udf(bc):
-    """(target_id, source_wkb) -> exact intersection area."""
-
-    def batch(tids, swkbs):
-        import pandas as pd
-
-        twkbs = pd.Series([bc.value[t] for t in tids])
-        return V.batch_intersection_area(swkbs, twkbs)
-
-    return F.pandas_udf(batch, "double")
-
-
-def make_dist_by_id_udf(bc):
-    """(x, y, target_id) -> exact point→boundary distance, geometry from
-    broadcast, vectorized per distinct target."""
-
-    def batch(xs, ys, tids):
-        import numpy as np
-        import pandas as pd
-
-        from ..geom.base import Geometry
-
-        segcache = batch.__dict__.setdefault("_segs", {})
-        px = xs.to_numpy(dtype=np.float64)
-        py = ys.to_numpy(dtype=np.float64)
-        out = np.full(len(px), np.inf)
-        df = pd.DataFrame({"i": np.arange(len(px))})
-        for tid, grp in df.groupby(tids.to_numpy(), sort=False):
-            sg = segcache.get(tid)
-            if sg is None:
-                g = Geometry.from_wkb(bc.value[tid])
-                segs = [
-                    np.column_stack([r[:-1], r[1:]])
-                    for rings in g.polygons()
-                    for r in rings
-                ]
-                sg = segcache[tid] = (
-                    np.vstack(segs) if segs else np.empty((0, 4))
-                )
-            if not len(sg):
-                continue
-            idx = grp["i"].to_numpy()
-            x1, y1, x2, y2 = sg[:, 0], sg[:, 1], sg[:, 2], sg[:, 3]
-            dx, dy = x2 - x1, y2 - y1
-            ll = np.where(dx * dx + dy * dy == 0, 1.0, dx * dx + dy * dy)
-            t = ((px[idx, None] - x1) * dx + (py[idx, None] - y1) * dy) / ll
-            t = np.clip(t, 0.0, 1.0)
-            d = np.hypot(x1 + t * dx - px[idx, None], y1 + t * dy - py[idx, None])
-            out[idx] = d.min(axis=1)
-        return pd.Series(out)
-
-    return F.pandas_udf(batch, "double")
-
-
-def make_pair_intersection_udf(bc, schema):
-    """(id_a, id_b) -> intersection struct with BOTH geometries from the
-    broadcast — zero geometry bytes over Arrow (self-join adjacency)."""
-
-    def batch(ids_a, ids_b):
-        import pandas as pd
-
-        va = pd.Series([bc.value[a] for a in ids_a])
-        vb = pd.Series([bc.value[b] for b in ids_b])
-        return V.batch_intersection(va, vb)
-
-    return F.pandas_udf(batch, schema).asNondeterministic()
+    udf = F.pandas_udf(batch, rtype)
+    if isinstance(rtype, StructType):
+        udf = udf.asNondeterministic()
+    return udf(*[a.col if isinstance(a, ById) else a for a in args])
 
 
 def hot_cells(

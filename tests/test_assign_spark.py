@@ -64,13 +64,17 @@ def test_assign_overlapping_source_by_area(spark, four_square_grid_df):
 
 
 def test_assign_to_max_tiebreak(spark):
-    """pandas idxmax takes the first (lowest target) among equal weights."""
+    """pandas idxmax takes the first (lowest target) among equal weights
+    and skips NULL weights; an all-NULL source keeps a NULL target."""
     rel = spark.createDataFrame(
-        [(1, 10, 5.0), (1, 3, 5.0), (2, 7, 1.0), (2, 4, 2.0)],
+        [
+            (1, 10, 5.0), (1, 3, 5.0), (2, 7, 1.0), (2, 4, 2.0),
+            (2, 1, None), (3, 5, None), (3, 6, None),
+        ],
         "source_id bigint, target_id bigint, weight double",
     )
     got = {r["source_id"]: r["target_id"] for r in assign_to_max(rel).collect()}
-    assert got == {1: 3, 2: 4}
+    assert got == {1: 3, 2: 4, 3: None}
 
 
 @pytest.mark.parametrize("knn", [False, True])

@@ -252,3 +252,54 @@ def test_pentagram_not_classified_convex():
     slow = V.batch_intersection_arrangement(a, b)
     assert np.allclose(fast["area"], slow["area"], atol=1e-9)
     assert np.allclose(fast["length"], slow["length"], atol=1e-9)
+
+
+def test_point_boundary_distance_matches_brute_force():
+    """The kNN fallback's distance kernel against a scalar per-segment
+    minimum over every ring of every part: holes and multipolygons
+    count, boundary points are exactly 0.0, a NULL polygon is +inf."""
+    import math
+
+    import pandas as pd
+
+    from maup_spark.geom import vector as V
+
+    holed = Geometry.polygon(
+        [(0, 0), (4, 0), (4, 4), (0, 4)], holes=[[(1, 1), (3, 1), (3, 3), (1, 3)]]
+    )
+    multi = Geometry.multipolygon(
+        [
+            [[(0, 0), (1, 0), (1, 1), (0, 1), (0, 0)]],
+            [[(5, 5), (7, 5), (6, 7), (5, 5)]],
+        ]
+    )
+    tri = Geometry.polygon([(-2, -2), (2, -3), (0, 1)])
+
+    def brute(x, y, g):
+        best = math.inf
+        for rings in g.polygons():
+            for r in rings:
+                for (x1, y1), (x2, y2) in zip(r[:-1].tolist(), r[1:].tolist()):
+                    dx, dy = x2 - x1, y2 - y1
+                    t = ((x - x1) * dx + (y - y1) * dy) / (dx * dx + dy * dy)
+                    t = min(1.0, max(0.0, t))
+                    best = min(best, math.hypot(x1 + t * dx - x, y1 + t * dy - y))
+        return best
+
+    rng = np.random.default_rng(3)
+    rows = [(float(x), float(y), g) for g in (holed, multi, tri)
+            for x, y in rng.uniform(-4, 9, size=(40, 2))]
+    on_boundary = [
+        (2.0, 0.0, holed), (2.0, 1.0, holed), (3.0, 3.0, holed),  # outer, hole edge, hole vertex
+        (0.5, 1.0, multi), (6.0, 5.0, multi), (7.0, 5.0, multi),
+        (0.0, 1.0, tri), (-2.0, -2.0, tri),
+    ]
+    rows += on_boundary
+    xs = pd.Series([r[0] for r in rows] + [0.0])
+    ys = pd.Series([r[1] for r in rows] + [0.0])
+    wkbs = pd.Series([r[2].wkb for r in rows] + [None])
+    got = V.batch_point_boundary_distance(xs, ys, wkbs).to_numpy()
+    want = [brute(x, y, g) for x, y, g in rows]
+    assert np.allclose(got[: len(rows)], want, rtol=0, atol=1e-12)
+    assert (got[len(rows) - len(on_boundary) : len(rows)] == 0.0).all()
+    assert got[-1] == math.inf
