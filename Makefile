@@ -1,7 +1,7 @@
 # Quality gates for the maup_spark engine.  MUST run from the repo root
 # (Spark workers import maup_spark from the driver cwd).
 
-.PHONY: gate test audit bench perfbench
+.PHONY: gate test audit bench perfbench probe
 
 # The pre-snapshot gate (judge r4 task 10): every registered driver
 # query vs its DuckDB oracle at BOTH parallelisms — local[8] and the
@@ -26,3 +26,9 @@ perfbench:
 	python3 perfbench/run.py --workload points_assign --seed 1 --seconds 16
 	python3 perfbench/run.py --workload polygon_overlay --seed 1 --seconds 16
 	python -m pytest perfbench/test_eventlog.py -q
+
+# The Spark-free geometry-kernel probe: microseconds per pair of the auto
+# tier and of the pinned arrangement, plus the auto tier's outcome mix.
+probe:
+	python3 perfbench/kernel_probe.py --workload polygon_overlay --seed 1
+	python3 perfbench/kernel_probe.py --workload tile_adjacency --seed 1

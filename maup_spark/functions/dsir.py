@@ -250,16 +250,20 @@ def source_divergence(
     n_sources x n_buckets) -> corpus bucket table (<= n_buckets rows)
     BROADCAST back -> per-source agg.  Zero windows, zero Python.
 
-    The (source, bucket) table is PERSISTED: it feeds three consumers
-    (corpus buckets ``cb``, per-source totals ``ts``, and the final
-    join), and without the persist each consumer re-runs the
-    corpus-wide explode + md5 chain — the dominant cost — so the whole
-    corpus was scanned four times per run (measured 35 s -> 13 s at
-    sf1.0; the cached table is bounded at n_sources x n_buckets rows).
-    MEMORY_AND_DISK keeps lineage for lost-executor recompute.
+    The corpus-wide sums come first, in ONE eager job: grouping sets
+    (bucket) / (source) / () over the (source, bucket) counts give the
+    corpus bucket counts ``cb``, the per-source totals ``ts`` and the
+    grand total ``T`` — at most n_buckets + n_sources + 1 rows, which
+    come back to the driver and re-enter the plan as local relations.
+    Each of the three, planned as its own consumer of the (source,
+    bucket) table, would re-run the corpus-wide explode + md5 chain (the
+    dominant cost); here the corpus is scanned twice per call, once by
+    that job and once when the result is collected.  Nothing is cached
+    or checkpointed, so the call leaves no persistent RDD behind.
 
     Returns DataFrame[source, n_grams, l1_scaled] (both exact)."""
-    from pyspark import StorageLevel
+    import pandas as pd
+    from pyspark.sql.types import LongType, StructField, StructType
 
     grams = docs.select(
         F.col(source_col).alias("source"),
@@ -268,41 +272,40 @@ def source_divergence(
     b = grams.select(
         "source", _bucket(F.col("gram"), n_buckets, hash_fn).alias("bucket")
     )
-    sb = (
-        b.groupBy("source", "bucket")
-        .agg(F.count("*").alias("c_sb"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    sb = b.groupBy("source", "bucket").agg(F.count("*").alias("c_sb"))
+    # grouping_id(bucket, source): 1 = per bucket, 2 = per source, 3 = all
+    sums = (
+        sb.groupingSets([["bucket"], ["source"], []], "bucket", "source")
+        .agg(F.sum("c_sb").alias("n"), F.grouping_id().alias("g"))
+        .collect()
     )
-    # Materialize NOW: the three consumers below enter the plan as
-    # broadcast-exchange builds, which Spark runs in concurrent driver
-    # threads — each would race the still-empty cache and re-run the
-    # full corpus scan anyway (measured: lazy persist left the cold run
-    # at ~40 s; eager fill takes it to ~13 s).  One small job, bounded
-    # output.
-    sb.count()
-    cb = sb.groupBy("bucket").agg(F.sum("c_sb").alias("c_b"))
-    tot = cb.agg(F.sum("c_b").alias("T")).select(
-        F.col("T").cast("decimal(38,0)").alias("T")
-    )
-    ts = sb.groupBy("source").agg(
-        F.sum("c_sb").cast("decimal(38,0)").alias("T_s")
-    )
-    j = (
-        sb.join(F.broadcast(cb), "bucket")
-        .join(F.broadcast(ts), "source")
-        .crossJoin(F.broadcast(tot))
-    )
+    spark = docs.sparkSession
+
+    def local(g, key, name):
+        """Grouping set ``g`` as a local relation (key, name); a NULL key
+        would find no join partner, so it is left out."""
+        pdf = pd.DataFrame(
+            [(r[key], r["n"]) for r in sums if r["g"] == g and r[key] is not None],
+            columns=[key, name],
+        )
+        schema = StructType([sb.schema[key], StructField(name, LongType())])
+        return spark.createDataFrame(pdf, schema)
+
+    cb = local(1, "bucket", "c_b")
+    ts = local(2, "source", "T_s")
     dec = lambda c: F.col(c).cast("decimal(38,0)")
-    term = F.abs(dec("c_sb") * F.col("T") - dec("c_b") * F.col("T_s")) - (
-        dec("c_b") * F.col("T_s")
+    T = F.lit(next((r["n"] for r in sums if r["g"] == 3), None)).cast(
+        "decimal(38,0)"
+    )
+    j = sb.join(F.broadcast(cb), "bucket").join(F.broadcast(ts), "source")
+    term = F.abs(dec("c_sb") * T - dec("c_b") * dec("T_s")) - (
+        dec("c_b") * dec("T_s")
     )
     agg = j.groupBy("source").agg(
-        F.sum(term).alias("__partial"),
-        F.first("T_s").alias("T_s"),
-        F.first("T").alias("T"),
+        F.sum(term).alias("__partial"), F.first("T_s").alias("T_s")
     )
     return agg.select(
         "source",
-        F.col("T_s").cast("long").alias("n_grams"),
-        (F.col("T") * F.col("T_s") + F.col("__partial")).alias("l1_scaled"),
+        F.col("T_s").alias("n_grams"),
+        (T * dec("T_s") + F.col("__partial")).alias("l1_scaled"),
     )

@@ -71,7 +71,7 @@ def connected_components(
     ``nodes`` must contain every vertex (isolated vertices keep their own
     id as the component label).
     """
-    und = (
+    und = edges_cached = (
         edges.select(
             F.least(F.col(src_col), F.col(dst_col)).alias("a"),
             F.greatest(F.col(src_col), F.col(dst_col)).alias("b"),
@@ -80,11 +80,30 @@ def connected_components(
         .distinct()
         # persist (not localCheckpoint): the input edge plan is often
         # expensive (LSH band joins); MEMORY_AND_DISK keeps lineage for
-        # lost-executor recompute and lets a re-built identical plan
-        # (bench repeats) reuse the cached relation
+        # lost-executor recompute.  Only round 1 reads it: round 1's
+        # localCheckpoints materialise in that round's convergence probe,
+        # so it is released once the loop ends
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
+    try:
+        und = _star_rounds(und, max_iter)
+    finally:
+        edges_cached.unpersist()
+    lab = _closed_min(und).select(
+        F.col("u").alias("node"), F.col("m").alias("__comp")
+    )
+    return (
+        nodes.select(F.col(node_col).alias("node"))
+        .join(lab, "node", "left")
+        .select(
+            "node", F.coalesce("__comp", F.col("node")).alias("comp")
+        )
+    )
 
+
+def _star_rounds(und: DataFrame, max_iter: int) -> DataFrame:
+    """Alternate large-star / small-star rounds until the labels are a
+    star forest; returns the final canonical edge table."""
     prev_sum = None
     for _ in range(max_iter):
         # ---- large star: v > u re-attach to min(N(u) ∪ {u}) ----
@@ -169,13 +188,4 @@ def connected_components(
             f"connected_components did not converge in {max_iter} "
             f"iterations (label sum still decreasing); raise max_iter"
         )
-    lab = _closed_min(und).select(
-        F.col("u").alias("node"), F.col("m").alias("__comp")
-    )
-    return (
-        nodes.select(F.col(node_col).alias("node"))
-        .join(lab, "node", "left")
-        .select(
-            "node", F.coalesce("__comp", F.col("node")).alias("comp")
-        )
-    )
+    return und

@@ -57,11 +57,12 @@ def intersections(
 
     ``carry_source_cols`` rides extra source columns through to the
     output (e.g. the data column being prorated) — avoids a second
-    full-size join downstream.  ``exact_kernel="auto"`` (default) lets
-    convex single-ring pairs with interior overlap clip via the
-    Sutherland–Hodgman fast path (~50× the arrangement's throughput on
-    polygon×lattice overlays); ``"arrangement"`` pins every non-rect
-    pair to the general planar-arrangement kernel.
+    full-size join downstream.  ``exact_kernel="auto"`` (default) decides
+    every pair with one convex side and one simple single-ring side
+    without the planar arrangement (a batch separation pre-pass, then a
+    Sutherland–Hodgman clip; see ``geom.vector.batch_intersection``);
+    ``"arrangement"`` pins every non-rect pair to the general
+    planar-arrangement kernel.
 
     Returns ``DataFrame[source_id, target_id, geometry, area, length]``.
     Mixed-dimension results (shared edges → lines, corner touches →

@@ -14,11 +14,15 @@ Physical notes (these made a 3-5× difference, verified by
   them; it is marked ``asNondeterministic`` so CollapseProject cannot
   clone the Python call per referencing expression (otherwise each
   struct-field access re-runs the UDF — observed in plans).
+- The candidate join emits **exactly one row per bbox-meeting pair**.
+  A codegen'd bbox-overlap filter on the join output drops pairs that
+  share a cell but whose bboxes are disjoint (about half the cell-join
+  rows of a polygon × lattice overlay).
 - Candidate-pair *dedup* (a pair meets in many cells — the reference
   dedups with ``set(...ravel())``, /root/reference/maup/indexed_geometries.py:26-27)
   uses the **reference-point rule**, not a shuffle: a pair is kept only
   in the cell containing the lower-left corner of its bbox overlap.
-  That corner lies in both covers whenever the bboxes intersect, so
+  That corner lies in both covers whenever the bboxes meet, so
   exactly one copy survives — a codegen'd filter on the join output,
   no ``dropDuplicates`` exchange of geometry payloads.
 """
@@ -476,7 +480,10 @@ def candidate_pairs(
     max_cells: int = 4096,
 ) -> DataFrame:
     """Cell-join candidate (source, target) pairs — exactly one row per
-    pair via the reference-point rule (module docstring), no shuffle.
+    bbox-meeting pair (closed bboxes, so edge and corner contact count):
+    a bbox-overlap filter plus the reference-point rule (module
+    docstring), no shuffle.  Pairs whose bboxes are disjoint never reach
+    the refine, which would find them empty anyway.
 
     ``drop_*_geom`` removes the geometry column right after its bbox is
     computed, so WKB never rides the join (use with broadcast-geometry
@@ -588,18 +595,18 @@ def candidate_pairs(
         F.greatest("__s_xmin", "__t_xmin"),
         F.greatest("__s_ymin", "__t_ymin"),
     )
-    # fine cells: reference-point dedup; sentinel cells: the pair met
-    # exactly once by construction, but needs the explicit bbox-overlap
-    # check the cell co-location no longer provides
+    # every pair must have closed bboxes that meet: sharing a cell does
+    # not imply it (two boxes can sit side by side in one cell), and
+    # sentinel cells carry no co-location at all.  Fine cells then keep
+    # the reference-point copy; a sentinel pair met exactly once by
+    # construction
     overlap = (
         (F.col("__s_xmin") <= F.col("__t_xmax"))
         & (F.col("__s_xmax") >= F.col("__t_xmin"))
         & (F.col("__s_ymin") <= F.col("__t_ymax"))
         & (F.col("__s_ymax") >= F.col("__t_ymin"))
     )
-    keep = F.when(F.col("cell_id") < 0, overlap).otherwise(
-        ref_cell == F.col("cell_id")
-    )
+    keep = overlap & ((F.col("cell_id") < 0) | (ref_cell == F.col("cell_id")))
     joined = joined.filter(keep)
     drop = ["cell_id"] + [f"{p}{b}" for p in ("__s_", "__t_") for b in BOUNDS]
     return joined.drop(*drop)

@@ -12,6 +12,18 @@ import os
 from pyspark.sql import SparkSession
 
 
+def default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """Driver heap when ``SPARK_DRIVER_MEM`` is unset: a quarter of the
+    machine's physical memory (``MemTotal``), clamped to [1, 24] GB.  A
+    machine whose memory cannot be read gets the 24 GB ceiling."""
+    try:
+        with open(meminfo) as f:
+            kb = next(int(ln.split()[1]) for ln in f if ln.startswith("MemTotal:"))
+    except (OSError, StopIteration, ValueError, IndexError):
+        kb = 4 * 24 * 1024 * 1024
+    return f"{max(1024, min(24 * 1024, kb // (4 * 1024)))}m"
+
+
 def get_spark(
     app_name: str = "maup-spark",
     master: str | None = None,
@@ -31,7 +43,10 @@ def get_spark(
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "24g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEM") or default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
     )

@@ -7,7 +7,7 @@ Invariants that hold for ANY pair of valid polygons:
 """
 
 import numpy as np
-from hypothesis import given, settings, strategies as st
+from hypothesis import example, given, settings, strategies as st
 
 from maup_spark.geom import (
     Geometry,
@@ -120,3 +120,132 @@ def test_union_monotone(polys):
     total = sum(p.area for p in polys)
     assert u.area <= total + 1e-7
     assert u.area >= max(p.area for p in polys) - 1e-7
+
+
+# ---- auto tier vs the pinned arrangement ---------------------------------
+#
+# Lattice shapes shifted by small integer offsets, so edge touches, corner
+# touches, exact separations and multi-piece clips (a U's two arms across
+# one rect) all occur.  Rings may start at any vertex and run either way.
+
+_SHAPES = {
+    "rect": [(0, 0), (4, 0), (4, 3), (0, 3)],
+    "square": [(0, 0), (2, 0), (2, 2), (0, 2)],
+    # convex, collinear vertices on two edges
+    "hexagon": [(0, 0), (2, 0), (4, 0), (4, 2), (2, 4), (0, 2), (0, 1)],
+    "triangle": [(0, 0), (4, 0), (0, 4)],
+    "L": [(0, 0), (4, 0), (4, 2), (2, 2), (2, 4), (0, 4)],
+    "U": [(0, 0), (6, 0), (6, 4), (4, 4), (4, 2), (2, 2), (2, 4), (0, 4)],
+    "chevron": [(0, 0), (2, 2), (4, 0), (4, 4), (2, 6), (0, 4)],
+}
+
+
+@st.composite
+def lattice_shapes(draw):
+    pts = _SHAPES[draw(st.sampled_from(sorted(_SHAPES)))]
+    k = draw(st.integers(0, len(pts) - 1))
+    pts = pts[k:] + pts[:k]
+    if draw(st.booleans()):
+        pts = pts[::-1]
+    dx, dy = draw(st.integers(0, 6)), draw(st.integers(0, 6))
+    return Geometry.polygon([(x + dx, y + dy) for x, y in pts]).wkb
+
+
+def _auto_vs_arrangement(pairs, with_wkb):
+    import pandas as pd
+
+    from maup_spark.geom import vector as V
+
+    a = pd.Series([p[0] for p in pairs], dtype=object)
+    b = pd.Series([p[1] for p in pairs], dtype=object)
+    auto = V.batch_intersection(a, b, with_wkb=with_wkb)
+    pinned = V.batch_intersection_arrangement(a, b, with_wkb=with_wkb)
+    assert list(auto["is_empty"]) == list(pinned["is_empty"])
+    assert np.allclose(auto["area"], pinned["area"], rtol=0.0, atol=1e-9)
+    assert np.allclose(auto["length"], pinned["length"], rtol=0.0, atol=1e-9)
+    if with_wkb:
+        for i in range(len(pairs)):
+            fa, fp = auto["wkb"][i], pinned["wkb"][i]
+            if fa is None or fp is None:
+                assert fa is fp
+                continue
+            assert Geometry.from_wkb(fa).gtype == Geometry.from_wkb(fp).gtype
+            if auto["area"][i] == 0.0:
+                assert fa == fp  # touch rows carry the arrangement's bytes
+
+
+_POINT_TOUCH = (
+    # convex side with a collinear vertex: the contact (3, 0) lies beyond
+    # its first edge's span but inside its extent on that line
+    Geometry.polygon([(0, 0), (2, 0), (4, 0), (4, 4), (0, 4)]).wkb,
+    Geometry.polygon([(3, 0), (4, -2), (2, -2)]).wkb,
+)
+
+
+_NEAR_MISS = (
+    # the L's inner edge x = 2 lies 1e-12 outside the rect: the clip
+    # drops it, the arrangement snaps it onto the rect's edge
+    Geometry.polygon([(0, 0), (4, 0), (4, 2), (2, 2), (2, 4), (0, 4)]).wkb,
+    Geometry.polygon([(2 + 1e-12, 1), (5, 1), (5, 5), (2 + 1e-12, 5)]).wkb,
+)
+
+
+@settings(max_examples=150, deadline=None)
+@given(st.lists(st.tuples(lattice_shapes(), lattice_shapes()), min_size=1, max_size=12))
+@example([_POINT_TOUCH, _NEAR_MISS])
+def test_auto_tier_matches_arrangement_no_wkb(pairs):
+    _auto_vs_arrangement(pairs, with_wkb=False)
+
+
+@settings(max_examples=100, deadline=None)
+@given(st.lists(st.tuples(lattice_shapes(), lattice_shapes()), min_size=1, max_size=12))
+@example([_POINT_TOUCH, _NEAR_MISS])
+def test_auto_tier_matches_arrangement_wkb(pairs):
+    _auto_vs_arrangement(pairs, with_wkb=True)
+
+
+def _ngon(cx, cy, r, n):
+    t = 2.0 * np.pi * np.arange(n) / n
+    return Geometry.polygon(list(zip(cx + r * np.cos(t), cy + r * np.sin(t)))).wkb
+
+
+_ELL = Geometry.polygon(
+    [(-20, -20), (20, -20), (20, -5), (-5, -5), (-5, 20), (-20, 20)]
+).wkb
+
+
+def test_auto_tier_handles_rings_beyond_the_batch_budget():
+    """Pairs whose padded product exceeds the pre-pass budget (two
+    1,100-gons), and a clip whose result keeps ~2,000 of a 4,000-gon's
+    vertices, skip the quadratic batch passes instead of failing.  The
+    circles' crossing points are not on the lattice, so area and length
+    are compared relative to their size (the arrangement snaps them)."""
+    import pandas as pd
+
+    from maup_spark.geom import vector as V
+
+    pairs = [
+        (_ngon(0, 0, 10, 1100), _ngon(5, 0, 10, 1100)),  # overlap
+        (_ngon(0, 0, 10, 1100), _ngon(30, 0, 10, 1100)),  # apart
+        (_ngon(0, 0, 10, 1100), _ngon(20, 0, 10, 1100)),  # point touch
+        (_ELL, _ngon(0, 0, 10, 4000)),
+        (_ngon(0, 0, 10, 4000), _ELL),
+    ]
+    # one row larger than the budget still makes one (non-empty) chunk
+    assert [len(p) for p in V._chunks(np.array([1 << 17, 5]))] == [1, 1]
+    a = pd.Series([p[0] for p in pairs], dtype=object)
+    b = pd.Series([p[1] for p in pairs], dtype=object)
+    for with_wkb in (False, True):
+        auto = V.batch_intersection(a, b, with_wkb=with_wkb)
+        pinned = V.batch_intersection_arrangement(a, b, with_wkb=with_wkb)
+        assert list(auto["is_empty"]) == list(pinned["is_empty"])
+        assert list(auto["is_empty"]) == [False, True, False, False, False]
+        assert np.allclose(auto["area"], pinned["area"], rtol=1e-10, atol=1e-9)
+        assert np.allclose(auto["length"], pinned["length"], rtol=1e-10, atol=1e-9)
+        if with_wkb:
+            for fa, fp in zip(auto["wkb"], pinned["wkb"]):
+                if fa is None or fp is None:
+                    assert fa is fp
+                else:
+                    ga, gp = Geometry.from_wkb(fa), Geometry.from_wkb(fp)
+                    assert ga.gtype == gp.gtype

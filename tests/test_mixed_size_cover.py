@@ -8,6 +8,8 @@ distributed analog of the reference STRtree handling mixed-size
 geometries natively (/root/reference/maup/indexed_geometries.py:19-29).
 """
 
+import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 from maup_spark import CellGrid
@@ -154,3 +156,56 @@ def test_assign_points_big_target_branch(spark):
     assert by_pid[100] == 1          # centre of the continent only
     assert by_pid[12] is None        # inside continent AND tile 2
     assert by_pid[197] == 3          # outside continent, inside tile 3
+
+
+@pytest.mark.parametrize("broadcast_targets", [True, False])
+def test_candidate_pairs_are_exactly_the_bbox_meeting_pairs(spark, broadcast_targets):
+    """Every pair whose closed bboxes meet (edge and corner contact
+    included), each exactly once, and no other pair — against a numpy
+    brute force.  On 2.5-unit cells many disjoint boxes share a cell;
+    quarter-unit coordinates make exact edge contacts common; a pile of
+    tiny sources in one cell turns it hot, so the shuffle path salts it;
+    8-unit boxes exceed ``max_cells`` and ride the sentinel cells on
+    both sides."""
+    from maup_spark.operators.spatial import hot_cells
+
+    grid = CellGrid(x0=-10, y0=-10, x1=10, y1=10, res=3)
+
+    rng = np.random.default_rng(5)
+
+    def boxes(n, lo, hi, size):
+        x0 = 0.25 * rng.integers(4 * lo, 4 * hi, n)
+        y0 = 0.25 * rng.integers(4 * lo, 4 * hi, n)
+        w = 0.25 * rng.integers(0, 4 * size + 1, n)
+        h = 0.25 * rng.integers(0, 4 * size + 1, n)
+        return np.column_stack([x0, y0, x0 + w, y0 + h])
+
+    pile = 5.01 + 0.0001 * rng.integers(0, 50, (120, 2))
+    src = np.vstack([
+        boxes(150, -3, 3, 1),
+        np.column_stack([pile, pile + 0.001]),
+        boxes(3, -8, 0, 8),
+    ])
+    tgt = np.vstack([boxes(100, -3, 3, 1), [[4.75, 4.75, 5.25, 5.25]], boxes(2, -8, 0, 8)])
+    sdf = spark.createDataFrame(
+        [(i, *map(float, b)) for i, b in enumerate(src)],
+        "sid bigint, x0 double, y0 double, x1 double, y1 double",
+    )
+    tdf = spark.createDataFrame(
+        [(j, *map(float, b)) for j, b in enumerate(tgt)],
+        "tid bigint, tx0 double, ty0 double, tx1 double, ty1 double",
+    )
+    assert hot_cells(with_cell_cover(sdf, grid, bounds_cols=("x0", "y0", "x1", "y1")))
+    cand = candidate_pairs(
+        sdf, tdf, grid, source_geom=None, target_geom=None,
+        source_bounds=("x0", "y0", "x1", "y1"),
+        target_bounds=("tx0", "ty0", "tx1", "ty1"),
+        broadcast_targets=broadcast_targets, max_cells=8,
+    )
+    got = sorted((r["sid"], r["tid"]) for r in cand.select("sid", "tid").collect())
+    meet = (
+        (src[:, None, 0] <= tgt[None, :, 2]) & (src[:, None, 2] >= tgt[None, :, 0])
+        & (src[:, None, 1] <= tgt[None, :, 3]) & (src[:, None, 3] >= tgt[None, :, 1])
+    )
+    want = sorted(zip(*map(np.ndarray.tolist, np.nonzero(meet))))
+    assert got == want
